@@ -176,14 +176,35 @@ object ManifestTable {
   /** Size-bounded LRU memo (access-order LinkedHashMap behind a lock).
     * Eviction is per-entry, oldest-accessed first — never a wholesale
     * clear, so a long-lived driver keeps its hot entries instead of
-    * paying a full cold-start burst at the cap (ADVICE r16). */
-  private final class LruMemo[K, V](cap: Int) {
-    private val m = new java.util.LinkedHashMap[K, V](64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-        size() > cap
-    }
+    * paying a full cold-start burst at the cap (ADVICE r16). The bound is
+    * on total `weight` (one per entry by default) and is re-evaluated at
+    * every put, so a cap read from a system property tracks it; an entry
+    * heavier than the whole cap is not kept. */
+  private[graft] final class LruMemo[K, V](cap: => Long,
+                                          weight: V => Long = (_: V) => 1L) {
+    private val m = new java.util.LinkedHashMap[K, V](64, 0.75f, true)
+    private var total = 0L
     def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
-    def put(k: K, v: V): Unit = m.synchronized(m.put(k, v): Unit)
+    def put(k: K, v: V): Unit = m.synchronized {
+      Option(m.remove(k)).foreach(old => total -= weight(old))
+      val w = weight(v)
+      val limit = cap
+      if (w <= limit) {
+        m.put(k, v)
+        total += w
+        // the new entry is the youngest, so this stops before reaching it
+        val eldestFirst = m.values.iterator
+        while (total > limit) {
+          total -= weight(eldestFirst.next())
+          eldestFirst.remove()
+        }
+      }
+    }
+    /** The cached value, or `make()` inserted under the lock — `make`
+      * must be cheap (a lazy holder when the real work is not). */
+    def getOrPut(k: K)(make: => V): V = m.synchronized {
+      get(k).getOrElse { val v = make; put(k, v); v }
+    }
   }
 
   private val statsCache =
@@ -218,13 +239,30 @@ object ManifestTable {
       new org.apache.parquet.conf.HadoopParquetConfiguration(
         new org.apache.hadoop.conf.Configuration(false))).build()
 
+  /** Opens a parquet file for footer or row-group reads. Local paths skip
+    * the Hadoop FileSystem layer entirely (3x cheaper per footer: no FS
+    * cache lookups, no checksum stream) and share [[localReadOptions]];
+    * a URI path goes through Hadoop with `conf` (defaults-free when
+    * null). */
+  private[graft] def openParquet(path: String,
+                                 conf: org.apache.hadoop.conf.Configuration = null)
+      : org.apache.parquet.hadoop.ParquetFileReader = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    if (path.contains("://"))
+      ParquetFileReader.open(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path),
+        if (conf == null) new org.apache.hadoop.conf.Configuration(false) else conf))
+    else
+      ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(java.nio.file.Paths.get(path)),
+        localReadOptions)
+  }
+
   /** None when the footer could not be read (transient IO, non-parquet
     * bytes) — the caller degrades to a stats-free line WITHOUT caching
     * the failure. */
   private def computeFileStats(path: String): Option[Map[String, (Double, Double)]] =
     scala.util.Try {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
       import org.apache.parquet.column.statistics._
       import org.apache.parquet.schema.LogicalTypeAnnotation.DecimalLogicalTypeAnnotation
       import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
@@ -232,17 +270,7 @@ object ManifestTable {
         if (math.abs(v) <= (1L << 53)) v.toDouble else math.nextDown(v.toDouble)
       def widenHi(v: Long): Double =
         if (math.abs(v) <= (1L << 53)) v.toDouble else math.nextUp(v.toDouble)
-      // local paths skip the Hadoop FileSystem layer entirely (3x
-      // cheaper per footer: no FS cache lookups, no checksum stream)
-      val rd =
-        if (path.contains("://"))
-          ParquetFileReader.open(HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(path),
-            new org.apache.hadoop.conf.Configuration(false)))
-        else
-          ParquetFileReader.open(
-            new org.apache.parquet.io.LocalInputFile(
-              java.nio.file.Paths.get(path)), localReadOptions)
+      val rd = openParquet(path)
       try {
         val acc = scala.collection.mutable.Map.empty[String, (Double, Double)]
         // Footer row count rides the stats map as the reserved pseudo-column

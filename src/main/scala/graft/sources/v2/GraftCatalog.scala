@@ -1775,43 +1775,35 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
         physFull, data, Nil, streamDir, sv, renames = renames)
   }
 
-  /** Ceiling on driver-resident delete keys per scan. Delete files are
-    * key-only (orders of magnitude smaller than the data they mask);
-    * below the ceiling they collect on the driver once and ship to
-    * executors inside the broadcast specs. ABOVE it (r16), equality
-    * deletes switch to the executor-side path: the specs carry the
-    * delete FILE PATHS and each executor JVM loads+caches the key set
-    * once ([[MoRDeleteKeyLoader]]) — the Iceberg posture, bounded by
-    * executor memory instead of a driver cliff. Position deletes keep
-    * the hard ceiling (their per-file ordinal maps drive row-group
-    * planning on the driver). Test override: -Dgraft.mor.maxDeleteKeys. */
-  private def MaxDeleteKeys: Int =
-    sys.props.get("graft.mor.maxDeleteKeys").map(_.toInt).getOrElse(5000000)
-
   /** Merge-on-read scan over a snapshot carrying delete entries of
     * EITHER kind (or both — the mixed chain, which until r10 session 3
     * refused with a compact pointer) — see [[GraftMoRScan]] for the
-    * group/filter design. */
+    * group/filter design. Planning reads delete metadata without Spark
+    * jobs: delete-file contents come from [[MoRDeleteKeyLoader]] (once
+    * per delete file per JVM), equality-delete row counts from the
+    * memoized [[ManifestTable.fileStats]], under the driver ceiling
+    * [[MoRDeleteKeyLoader.MaxDeleteKeys]]. */
   private def buildMoR(): Scan = {
+    import MoRDeleteKeyLoader.MaxDeleteKeys
     val delEntries = entries.filter(_.deleteKey.isDefined)
     val delSeqs = delEntries.map(_.seq).distinct.sorted
     val data = prunedDataEntries
 
     // position deletes: (file -> deleted physical ordinals), loaded once
-    // driver-side under the same loud ceiling as equality keys
+    // per delete file per JVM under the same loud ceiling as equality keys
     def norm(p: String): String =
       if (p.startsWith("file:")) java.net.URI.create(p).getPath else p
     val posFiles = entries.filter(_.posDelete).map(_.path)
     val posDeletes: Map[String, Array[Long]] =
       if (posFiles.isEmpty) Map.empty
       else {
-        val delRows = spark.read.parquet(posFiles: _*)
-          .select("file_path", "pos").collect()
+        val delRows = posFiles.flatMap(p =>
+          MoRDeleteKeyLoader.fileKeys(p, Array("file_path", "pos"), Array(3, 0)))
         require(delRows.length <= MaxDeleteKeys,
           s"GraftCatalog: $ident carries ${delRows.length} position deletes — " +
             s"over the merge-on-read ceiling ($MaxDeleteKeys); compact the table")
-        delRows.groupBy(r => norm(r.getString(0)))
-          .map { case (f, rs) => f -> rs.map(_.getLong(1)) }
+        delRows.groupBy(r => norm(r(0).asInstanceOf[String]))
+          .map { case (f, rs) => f -> rs.map(_(1).asInstanceOf[Long]).toArray }
       }
 
     // row-group layout of every position-touched file, read ONCE from
@@ -1828,11 +1820,8 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
       else {
         val touchedPaths = data.map(e => norm(e.path))
           .filter(posDeletes.contains).distinct
-        val hc = spark.sessionState.newHadoopConf()
         touchedPaths.map { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p), hc)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val r = ManifestTable.openParquet(p)
           try {
             p -> r.getFooter.getBlocks.asScala.toArray
               .map(b => (b.getStartingPos, b.getRowCount))
@@ -1855,41 +1844,27 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
       }
     }
 
-    // footer row counts of every equality-delete file (free metadata —
-    // the same bounded pass the position path uses) decide eager vs
-    // executor-side loading BEFORE any driver collect can OOM
-    val eqDeleteRows: Long = {
-      val eqPaths = delEntries.filterNot(_.posDelete).map(_.path).distinct
-      if (eqPaths.isEmpty) 0L
-      else {
-        val hc = spark.sessionState.newHadoopConf()
-        eqPaths.map { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p), hc)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-          finally r.close()
-        }.sum
-      }
-    }
-    val lazyEqKeys = eqDeleteRows > MaxDeleteKeys
+    // footer row counts of every equality-delete file, from the memoized
+    // manifest footer stats, decide eager vs executor-side loading BEFORE
+    // any driver load can OOM; a failed footer read (no `__rows`, never
+    // memoized) errs toward the executor-side path
+    val eqDeleteRows: Seq[Option[Long]] =
+      delEntries.filterNot(_.posDelete).map(_.path).distinct
+        .map(p => ManifestTable.fileStats(p).get("__rows").map(_._1.toLong))
+    val lazyEqKeys =
+      eqDeleteRows.contains(None) || eqDeleteRows.flatten.sum > MaxDeleteKeys
     val lazyConf =
       if (lazyEqKeys) new SerializableHadoopConf(spark.sessionState.newHadoopConf())
       else null
 
-    // each (delete seq, key spec)'s key set is loaded ONCE, then unioned
-    // per group — a chain of k delete commits costs k small driver reads.
-    // A spec is one or more comma-separated columns (composite row ids).
-    val loaded = scala.collection.mutable.Map.empty[(Int, String), Array[Array[Any]]]
-    def keysOf(seq: Int, spec: String): Array[Array[Any]] = loaded.getOrElseUpdate(
-      (seq, spec), {
-        val cols = ManifestTable.delKeyCols(spec)
-        val paths = delEntries.filter(e => e.seq == seq && e.deleteKey.contains(spec))
-          .map(_.path)
-        spark.read.parquet(paths: _*)
-          .select(cols.map(org.apache.spark.sql.functions.col): _*)
-          .collect().map(r => Array.tabulate[Any](cols.length)(r.get))
-      })
+    // each delete file's key rows come from the per-JVM memo, then union
+    // per group — a chain of k delete commits costs one read per NEW
+    // delete file. A spec is one or more comma-separated columns
+    // (composite row ids). `loaded` holds this scan's files, each once.
+    val loaded = scala.collection.mutable.Map.empty[String, Array[Array[Any]]]
+    def keysOf(path: String, cols: Seq[String]): Array[Array[Any]] =
+      loaded.getOrElseUpdate(path,
+        MoRDeleteKeyLoader.fileKeys(path, cols.toArray, cols.map(kindOf).toArray))
 
     // group data files by how many delete commits apply: a delete at seq
     // d covers data with seq < d, so "applicable deletes" is a suffix of
@@ -1904,13 +1879,10 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
         delEntries.filter(e => applicable.contains(e.seq))
           .groupBy(_.deleteKey.get).toSeq.sortBy(_._1)
           .map { case (spec, ds) =>
-            if (lazyEqKeys)
-              (ManifestTable.delKeyCols(spec), Array.empty[Array[Any]],
-                ds.map(_.path).distinct)
-            else
-              (ManifestTable.delKeyCols(spec),
-                ds.map(_.seq).distinct.flatMap(sq => keysOf(sq, spec)).toArray,
-                Seq.empty[String])
+            val cols = ManifestTable.delKeyCols(spec)
+            val paths = ds.map(_.path).distinct
+            if (lazyEqKeys) (cols, Array.empty[Array[Any]], paths)
+            else (cols, paths.flatMap(keysOf(_, cols)).toArray, Seq.empty[String])
           }
       val keyCols = bySpec.flatMap(_._1).distinct
       val internal = StructType(required.fields ++
@@ -1946,7 +1918,8 @@ class GraftScanBuilder(ident: String, spark: SparkSession,
             keyRows = rows,
             keyFiles = files.toArray,
             keyNames = cols.toArray,
-            conf = lazyConf)
+            conf = lazyConf,
+            keyFileStamps = files.map(MoRDeleteKeyLoader.stamp).toArray)
         }.toArray,
         projection = required.fields.map(f => internal.fieldIndex(f.name)),
         readTypes = internal.fields.map(_.dataType),

@@ -19,9 +19,10 @@ import graft.sources.ManifestTable
   * them), planning one stock parquet batch per group — file pruning,
   * pushed filters, column pruning all intact — and filtering each
   * group's rows against ITS applicable delete-key sets in the partition
-  * reader. The key sets are loaded once on the driver (delete files are
-  * key-only and orders of magnitude smaller than data; a loud cap
-  * refuses pathological sets with a pointer to compact()) and shipped to
+  * reader. The key sets are loaded once per delete file per JVM, with no
+  * Spark job ([[MoRDeleteKeyLoader]]: delete files are key-only and
+  * orders of magnitude smaller than data; a loud cap refuses
+  * pathological sets with a pointer to compact()) and shipped to
   * executors via a torrent broadcast, so a 1000-executor scan fetches
   * each set once, not once per task.
   *
@@ -45,7 +46,9 @@ private[v2] final case class MoRDeleteSet(
     // bounded by executor memory, never by the driver
     keyFiles: Array[String] = Array.empty,
     keyNames: Array[String] = Array.empty,
-    conf: SerializableHadoopConf = null)
+    conf: SerializableHadoopConf = null,
+    // each key file's (length, mtime) at planning: the executor cache key
+    keyFileStamps: Array[(Long, Long)] = Array.empty)
 
 /** Minimal serializable Hadoop Configuration carrier (Spark's own
   * wrapper is private[spark]): writes the conf's XML-backed key/value
@@ -64,62 +67,146 @@ private[v2] final class SerializableHadoopConf(
   }
 }
 
-/** Executor-side delete-key loading with a process-level cache: each
-  * executor JVM materializes a given (delete files, key columns) set
-  * ONCE — a 1000-executor scan pays 1000 small parquet reads, not one
-  * per task — and every partition reader probes the shared HashSet.
-  * Values land in the exact domain the row probe extracts
-  * (boxed Long/Int/Double/String/Boolean; composite keys as Vector), so
-  * eager and lazy sets are interchangeable. */
+/** Delete-file key loading, ONE loader for both sides of the scan. Every
+  * delete file — equality keys or (file_path, pos) position rows — is
+  * read directly with the parquet reader (no Spark job) into the exact
+  * domain the row probe extracts: boxed Long/Int/Double/String/Boolean,
+  * one array per row, composite keys as several elements. NULL-bearing
+  * rows erase nothing (the left-anti contract), so they are dropped at
+  * load.
+  *
+  *   - Driver ([[fileKeys]]): one memo entry per delete file content —
+  *     key (path, length, mtime, key columns), the [[ManifestTable.fileStats]]
+  *     convention — LRU-evicted per entry and bounded by the total keys
+  *     it holds at [[MaxDeleteKeys]]. Delete files are immutable once
+  *     committed, so a chain of k delete commits costs one read per NEW
+  *     delete file; planning a scan issues no Spark job. Values are plain
+  *     arrays and pin no session.
+  *   - Executors ([[set]]): the over-ceiling path ships delete FILES, and
+  *     each executor JVM builds a given (files, key columns) probe set
+  *     once — a 1000-executor scan pays 1000 small parquet reads, not one
+  *     per task — keyed by every file's (path, length, mtime) and evicted
+  *     per entry. Eager and lazy sets are interchangeable. */
 private[graft] object MoRDeleteKeyLoader {
   private[graft] val loads = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.HashSet[Any]]()
 
+  /** Ceiling on driver-resident delete keys: per scan (the equality keys
+    * of this scan's delete files; its position deletes separately), and
+    * the bound of the driver memo. Delete files are key-only (orders of
+    * magnitude smaller than the data they mask); below the ceiling their
+    * keys load on the driver once per delete file per JVM, with no Spark
+    * job, and ship to executors inside the broadcast specs. ABOVE it
+    * (r16), equality deletes switch to the executor-side path: the specs
+    * carry the delete FILE PATHS and each executor JVM loads+caches the
+    * key set once ([[set]]) — the Iceberg posture, bounded by executor
+    * memory instead of a driver cliff. Position deletes keep the hard
+    * ceiling (their per-file ordinal maps drive row-group planning on the
+    * driver). Test override: -Dgraft.mor.maxDeleteKeys. */
+  private[v2] def MaxDeleteKeys: Int =
+    sys.props.get("graft.mor.maxDeleteKeys").map(_.toInt).getOrElse(5000000)
+
+  /** A file's content identity next to its path: (length, mtime). */
+  private[v2] def stamp(path: String): (Long, Long) = {
+    val f = new java.io.File(path)
+    (f.length(), f.lastModified())
+  }
+
+  private def colsKey(names: Array[String], kinds: Array[Int]): String =
+    names.indices.map(i => s"${names(i)}:${kinds(i)}").mkString(",")
+
+  private val fileMemo =
+    new ManifestTable.LruMemo[(String, Long, Long, String), Array[Array[Any]]](
+      MaxDeleteKeys.toLong, rows => math.max(1L, rows.length.toLong))
+
+  /** The key rows of ONE delete file, read at most once per JVM per
+    * content (driver side). */
+  def fileKeys(path: String, names: Array[String], kinds: Array[Int])
+      : Array[Array[Any]] = {
+    val (len, mtime) = stamp(path)
+    val key = (path, len, mtime, colsKey(names, kinds))
+    fileMemo.get(key).getOrElse {
+      val rows = readKeys(path, names, kinds, null)
+      fileMemo.put(key, rows)
+      rows
+    }
+  }
+
+  /** Runs the load at most once per key, outside the memo's lock. */
+  private final class Once(load: () => java.util.HashSet[Any]) {
+    lazy val value: java.util.HashSet[Any] = load()
+  }
+  private val sets = new ManifestTable.LruMemo[String, Once](64)
+
+  /** The probe set of an over-ceiling delete spec (executor side). */
   def set(ds: MoRDeleteSet): java.util.HashSet[Any] = {
-    val key = ds.keyFiles.mkString("|") + "#" + ds.keyNames.mkString(",")
-    // delete files are immutable (manifest commits never rewrite them),
-    // so path-keyed entries never go stale; bound the cache coarsely
-    if (cache.size > 64) cache.clear()
-    cache.computeIfAbsent(key, _ => load(ds))
+    val key = ds.keyFiles.indices.map { i =>
+      val (len, mtime) = ds.keyFileStamps(i)
+      s"${ds.keyFiles(i)}|$len|$mtime"
+    }.mkString("\n") + "#" + colsKey(ds.keyNames, ds.keyKinds)
+    sets.getOrPut(key)(new Once(() => load(ds))).value
   }
 
   private def load(ds: MoRDeleteSet): java.util.HashSet[Any] = {
     loads.incrementAndGet(): Unit
-    val s = new java.util.HashSet[Any]()
     val conf =
       if (ds.conf == null) new org.apache.hadoop.conf.Configuration()
       else ds.conf.value
+    val s = new java.util.HashSet[Any]()
     ds.keyFiles.foreach { f =>
-      val rdr = org.apache.parquet.hadoop.ParquetReader.builder(
-        new org.apache.parquet.hadoop.example.GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(f)).withConf(conf).build()
-      try {
-        var g = rdr.read()
-        while (g != null) {
-          var anyNull = false
-          val vals = new Array[Any](ds.keyNames.length)
+      readKeys(f, ds.keyNames, ds.keyKinds, conf).foreach(r => s.add(probeKey(r)): Unit)
+    }
+    s
+  }
+
+  /** A key row as the probe sees it: the scalar, or a Vector of values. */
+  private[v2] def probeKey(row: Array[Any]): Any = if (row.length == 1) row(0) else row.toVector
+
+  /** Every non-NULL key row of one parquet file, read group by group over
+    * the key columns only. A key column the file lacks reads NULL in
+    * every row, so such a file erases nothing. */
+  private def readKeys(path: String, names: Array[String], kinds: Array[Int],
+                       conf: org.apache.hadoop.conf.Configuration): Array[Array[Any]] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{FLOAT, INT32}
+    val rd = ManifestTable.openParquet(path, conf)
+    try {
+      val fileSchema = rd.getFooter.getFileMetaData.getSchema
+      if (!names.forall(fileSchema.containsField)) return Array.empty
+      val fields = names.map(n => fileSchema.getType(fileSchema.getFieldIndex(n)))
+      val proj = new org.apache.parquet.schema.MessageType(fileSchema.getName, fields: _*)
+      val physical = fields.map(_.asPrimitiveType.getPrimitiveTypeName)
+      rd.setRequestedSchema(proj)
+      val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(proj, fileSchema)
+      val out = Array.newBuilder[Array[Any]]
+      var pages = rd.readNextRowGroup()
+      while (pages != null) {
+        val rr = io.getRecordReader(pages,
+          new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(proj))
+        var n = pages.getRowCount
+        while (n > 0) {
+          val g = rr.read()
+          val vals = new Array[Any](names.length)
           var i = 0
-          while (i < ds.keyNames.length && !anyNull) {
-            val nm = ds.keyNames(i)
-            // NULL delete keys erase nothing (the left-anti contract)
-            if (g.getFieldRepetitionCount(nm) == 0) anyNull = true
-            else vals(i) = ds.keyKinds(i) match {
-              case 0 => g.getLong(nm, 0)
-              case 1 => g.getInteger(nm, 0)
-              case 2 => g.getDouble(nm, 0)
-              case 3 => g.getString(nm, 0)
-              case 4 => g.getBoolean(nm, 0)
+          var anyNull = false
+          while (i < names.length && !anyNull) {
+            if (g.getFieldRepetitionCount(i) == 0) anyNull = true
+            else vals(i) = kinds(i) match {
+              // a narrower physical type widens to the column's type, as
+              // the library read's anti join compares them
+              case 0 => if (physical(i) == INT32) g.getInteger(i, 0).toLong else g.getLong(i, 0)
+              case 1 => g.getInteger(i, 0)
+              case 2 => if (physical(i) == FLOAT) g.getFloat(i, 0).toDouble else g.getDouble(i, 0)
+              case 3 => g.getString(i, 0)
+              case 4 => g.getBoolean(i, 0)
             }
             i += 1
           }
-          if (!anyNull)
-            s.add(if (vals.length == 1) vals(0) else vals.toVector): Unit
-          g = rdr.read()
+          if (!anyNull) out += vals
+          n -= 1
         }
-      } finally rdr.close()
-    }
-    s
+        pages = rd.readNextRowGroup()
+      }
+      out.result()
+    } finally rd.close()
   }
 }
 
@@ -137,17 +224,12 @@ private[v2] final case class MoRGroupSpec(
   /** Executor-side probe sets, one per delete spec: scalar keys probe a
     * HashSet[Any] directly (no per-row allocation); composite keys probe
     * a HashSet of value vectors. NULL delete keys erase nothing (the
-    * left-anti contract), so they never enter a set. */
+    * left-anti contract), so [[MoRDeleteKeyLoader]] never loads them. */
   def buildSets(): Array[java.util.HashSet[Any]] = deleteSets.map { ds =>
     if (ds.keyFiles.nonEmpty) MoRDeleteKeyLoader.set(ds)
     else {
       val s = new java.util.HashSet[Any](math.max(16, ds.keyRows.length * 2))
-      ds.keyRows.foreach { r =>
-        if (r.forall(_ != null)) {
-          val key: Any = if (r.length == 1) r(0) else r.toVector
-          s.add(key): Unit
-        }
-      }
+      ds.keyRows.foreach(r => s.add(MoRDeleteKeyLoader.probeKey(r)): Unit)
       s
     }
   }
@@ -455,7 +537,9 @@ private[v2] final class MoRColumnarReader(
   * are physical file positions (untouched by logical equality deletes),
   * and equality deletes scope by commit sequence exactly as in the
   * delete-free-file case, matching `ManifestTable.assemble`'s library
-  * semantics row for row. `dataPaths` backs
+  * semantics row for row. Its delete state (key sets, per-file deleted
+  * ordinals) is loaded once per delete file per JVM, with no Spark job
+  * ([[MoRDeleteKeyLoader]]). `dataPaths` backs
   * [[GraftCatalog.scannedFiles]] pruning assertions. */
 private[v2] final class GraftMoRScan(spark: SparkSession,
                                      output: StructType,
