@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{ParityFunctions => PF}
 
 /** Fuzzy-deduplication operators for a training-data pipeline: MinHash+LSH,
@@ -112,13 +116,28 @@ object Dedup {
   }
 
   /** Connected components over near-duplicate pairs → dedup clusters
-    * (component id = smallest member id). Min-label propagation: each
-    * iteration is one join + partial-min aggregate, converging within the
-    * cluster diameter (near-dup clusters are shallow). The GraphX-free
-    * formulation that scales with ordinary shuffle capacity.
+    * (component id = smallest member id). Synchronous min-label
+    * propagation: each round, every vertex takes the smallest label among
+    * itself and its neighbours; the rounds stop at quiescence or after
+    * `maxIter`, converging within the cluster diameter (near-dup clusters
+    * are shallow).
     *
-    * Fault-tolerance: labels are RELIABLY checkpointed every
-    * `checkpointEvery` iterations (`rdd.checkpoint()` to `checkpointDir` —
+    * Where the rounds run: the symmetric edge relation is collected with
+    * `limit(n + 1)`, n = `spark.sql.autoBroadcastJoinThreshold` ÷ bytes
+    * per edge (Spark's own row estimate, 8 + 2 × the id type's default
+    * size) — the size at which Spark itself ships a relation through the
+    * driver, and [[keepCanonical]] broadcasts the result anyway. If it
+    * fits (and the ids are Long, Int or binary-collated String, none
+    * null), the same rounds run in driver arrays and the result is a
+    * local frame. Its only Spark work is the distinct edges' shuffle and
+    * the collect, so there is nothing to checkpoint: no checkpoint dir is
+    * set and no lineage outlives the call. Larger graphs, other id types
+    * and a threshold of -1 take the distributed loop below; both give the
+    * same labels and the same round count.
+    *
+    * Fault-tolerance of the distributed loop: each round is one join +
+    * partial-min aggregate, and labels are RELIABLY checkpointed every
+    * `checkpointEvery` rounds (`rdd.checkpoint()` to `checkpointDir` —
     * pass a durable HDFS/S3 path in production; `localCheckpoint` would pin
     * blocks to executors and lose them on executor failure/deallocation).
     * Between checkpoints the persisted RDD bounds lineage to
@@ -134,14 +153,71 @@ object Dedup {
                           checkpointEvery: Int = 3): DataFrame =
     connectedComponentsStats(pairs, maxIter, checkpointDir, checkpointEvery)._1
 
-  /** [[connectedComponents]] plus per-iteration wall seconds — the scale
-    * probe ([[graft.CCProbe]]) asserts iteration count stays within the
-    * graph diameter bound and per-iteration cost stays flat (i.e. the
-    * persist/checkpoint discipline really does stop lineage growth). */
+  /** [[connectedComponents]] plus per-round wall seconds — one entry per
+    * min-label round, so `ConnectedComponentsSpec` can check the round
+    * count against the graph diameter on both the local and the
+    * distributed path. */
   def connectedComponentsStats(pairs: DataFrame, maxIter: Int = 20,
                                checkpointDir: Option[String] = None,
                                checkpointEvery: Int = 3): (DataFrame, List[Double]) = {
-    val spark = pairs.sparkSession
+    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .distinct()
+    val labelSchema = edges.select(col("src").as("id"), col("src").as("component")).schema
+    localComponents(edges, labelSchema, maxIter).getOrElse(
+      distributedComponents(edges, labelSchema, maxIter, checkpointDir, checkpointEvery))
+  }
+
+  /** The min-label rounds on the driver, when the edge relation fits the
+    * broadcast threshold; None (after collecting at most n + 1 edges)
+    * otherwise. Vertices are ranked by Spark's ordering of the id type,
+    * so the smallest label index IS the smallest id. */
+  private def localComponents(edges: DataFrame, labelSchema: StructType,
+                              maxIter: Int): Option[(DataFrame, List[Double])] = {
+    val spark = edges.sparkSession
+    val idType = labelSchema("id").dataType
+    val ordering: Option[Ordering[Any]] = idType match {
+      case LongType => Some(Ordering.by[Any, Long](_.asInstanceOf[Long]))
+      case IntegerType => Some(Ordering.by[Any, Int](_.asInstanceOf[Int]))
+      case StringType =>
+        Some(Ordering.by[Any, UTF8String](s => UTF8String.fromString(s.asInstanceOf[String])))
+      case _ => None
+    }
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val maxEdges = math.min(threshold / (8 + 2 * idType.defaultSize), Int.MaxValue - 1L).toInt
+    for {
+      ord <- ordering if threshold >= 0
+      rows = edges.limit(maxEdges + 1).collect()
+      if rows.length <= maxEdges && !rows.exists(r => r.isNullAt(0) || r.isNullAt(1))
+    } yield {
+      val ids = rows.map(_.get(0)).distinct.sorted(ord) // symmetric: every vertex is a src
+      val index = ids.zipWithIndex.toMap
+      val src = rows.map(r => index(r.get(0)))
+      val dst = rows.map(r => index(r.get(1)))
+      var labels = Array.range(0, ids.length)
+      var round = 0
+      var done = false
+      val roundSecs = List.newBuilder[Double]
+      while (round < maxIter && !done) {
+        val t0 = System.nanoTime()
+        val next = labels.clone()
+        for (e <- src.indices) next(src(e)) = math.min(next(src(e)), labels(dst(e)))
+        done = next.sameElements(labels)
+        labels = next
+        round += 1
+        roundSecs += (System.nanoTime() - t0) / 1e9
+      }
+      val out = ids.indices.map(v => Row(ids(v), ids(labels(v))))
+      (spark.createDataFrame(out.asJava, labelSchema), roundSecs.result())
+    }
+  }
+
+  /** The min-label rounds as Spark jobs: one join + min aggregate per
+    * round, labels persisted and periodically checkpointed. */
+  private def distributedComponents(edgeRelation: DataFrame, labelSchema: StructType,
+                                    maxIter: Int, checkpointDir: Option[String],
+                                    checkpointEvery: Int): (DataFrame, List[Double]) = {
+    val spark = edgeRelation.sparkSession
     val sc = spark.sparkContext
     if (sc.getCheckpointDir.isEmpty) checkpointDir match {
       case Some(d) => sc.setCheckpointDir(d)
@@ -167,12 +243,9 @@ object Dedup {
           rm(tmp.toFile)
         }))
     }
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct().checkpoint()
+    val edges = edgeRelation.checkpoint()
     var labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("component"))
-    val labelSchema = labels.schema
     var prevRdd: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None
     var iter = 0
     var done = false

@@ -141,73 +141,88 @@ object Similarity {
     aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"),
       (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x).cast("long")
 
+  /** Index (0-based) of the centroid nearest `v` by squared L2 distance,
+    * the left fold Σ (x−c)² from 0.0. Ties go to the smaller index and a
+    * NaN distance ranks above every number, as in Spark's ordering of
+    * doubles. The one assignment rule of [[kmeans]]: its Lloyd passes and
+    * its returned projection both call it. */
+  private def nearest(cs: Array[Array[Double]], v: Array[Double]): Int = {
+    require(v.length == cs(0).length,
+      s"kmeans: vector of dimension ${v.length}, centroids of ${cs(0).length}")
+    var best = 0
+    var bestD = 0.0
+    var j = 0
+    while (j < cs.length) {
+      val c = cs(j)
+      var d = 0.0
+      var i = 0
+      while (i < v.length) { val t = v(i) - c(i); d += t * t; i += 1 }
+      if (j == 0 || java.lang.Double.compare(d, bestD) < 0) { best = j; bestD = d }
+      j += 1
+    }
+    best
+  }
+
   /** Distributed Lloyd k-means over an embedding column — IVF centroid
-    * training. Each iteration: broadcast the k centroids, assign every row
-    * to its nearest centroid (k-way crossJoin against the broadcast — a
-    * map-side operation, no shuffle of the corpus), then recompute
-    * centroids as per-cluster element-wise means (posexplode → one hash
-    * aggregate on (cluster, pos) — the only shuffle, and it carries
-    * k·dim·partitions rows at most after partial aggregation).
+    * training. The k centroids live on the driver (k·dim doubles — bytes,
+    * not data). Each iteration is ONE Spark job over the corpus: every
+    * partition assigns its vectors to the nearest centroid and folds them
+    * into per-cluster (count, Σ vector) partials, the partials reduce to
+    * the driver, and centroid = Σ / count. The corpus is never shuffled
+    * and no lineage grows across iterations.
     *
     * Deterministic: init = the k rows with the smallest ids (no RNG —
     * retry- and engine-stable, same rationale as the md5 hash sampling),
-    * ties in the argmin break on cluster index. Returns (assignments:
-    * id, cluster; centroids: cluster, centroid array<double>).
+    * ties in the argmin break on the smaller cluster, and a cluster that
+    * loses every member keeps its previous centroid. A row with a null
+    * vector joins cluster 1 and moves no centroid.
+    *
+    * Returns (assignments: id, cluster 1..k — a lazy projection, no
+    * shuffle, taken against the centroids at the START of the last
+    * iteration; centroids: cluster, centroid array<double> — the final
+    * ones, a local frame).
     */
   def kmeans(corpus: DataFrame, k: Int, iterations: Int,
              idCol: String = "vec_id", vecCol: String = "v"): (DataFrame, DataFrame) = {
     require(k >= 1 && iterations >= 1, "kmeans: k and iterations must be >= 1")
     val spark = corpus.sparkSession
+    import spark.implicits._
     val vecs = corpus.select(col(idCol), col(vecCol).cast("array<double>").as("_v"))
-    // centroids are k small rows: materialize them to the driver each
-    // iteration (k·dim doubles — bytes, not data) and rebuild a literal
-    // frame, so the Lloyd loop carries NO growing lineage — each iteration
-    // recomputes only itself, and the returned frames don't re-run the
-    // whole chain (same discipline as connectedComponents' checkpoints).
-    import scala.jdk.CollectionConverters._
-    val centroidSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("_j", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("_c",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
-    def materialize(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.collect().toSeq.asJava, centroidSchema)
-    var centroids = materialize(vecs.orderBy(col(idCol)).limit(k)
-      .select(row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col(idCol))).cast("long").as("_j"), col("_v").as("_c")))
+    val init = vecs.orderBy(col(idCol)).limit(k).select(col("_v")).as[Array[Double]].collect()
     // limit(k) on a smaller corpus silently seeds < k centroids, and the
     // empty-cluster retention would then preserve that shrunken count
     // forever — the exact silent-fewer-cells failure IVF consumers can't
-    // tolerate. The init collect gives the check for free.
-    require(centroids.count() == k,
-      s"kmeans: corpus has fewer than k=$k vectors")
-    def assign(cs: DataFrame): DataFrame = {
-      val d = aggregate(zip_with(col("_v"), col("_c"),
-        (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
-      vecs.crossJoin(broadcast(cs))
-        .select(col(idCol), col("_v"), d.as("_d"), col("_j"))
-        .groupBy(col(idCol))
-        .agg(min(struct(col("_d"), col("_j"))).getField("_j").as("cluster"),
-          first(col("_v")).as("_v"))
+    // tolerate
+    require(init.length == k, s"kmeans: corpus has fewer than k=$k vectors")
+    val points = vecs.filter(col("_v").isNotNull).select(col("_v")).as[Array[Double]].rdd
+    val dim = init(0).length
+    def step(cs: Array[Array[Double]]): Array[Array[Double]] = {
+      val (counts, sums) = points.mapPartitions { it =>
+        val n = new Array[Long](k)
+        val s = Array.ofDim[Double](k, dim)
+        it.foreach { v =>
+          val j = nearest(cs, v)
+          n(j) += 1
+          var i = 0
+          while (i < dim) { s(j)(i) += v(i); i += 1 }
+        }
+        Iterator.single((n, s))
+      }.reduce { case ((n1, s1), (n2, s2)) =>
+        for (j <- 0 until k) {
+          n1(j) += n2(j)
+          for (i <- 0 until dim) s1(j)(i) += s2(j)(i)
+        }
+        (n1, s1)
+      }
+      Array.tabulate(k)(j => if (counts(j) == 0) cs(j) else sums(j).map(_ / counts(j)))
     }
-    var a: DataFrame = assign(centroids)
-    for (i <- 0 until iterations) {
-      if (i > 0) a = assign(centroids)
-      val recomputed = a.select(col("cluster"), posexplode(col("_v")).as(Seq("_p", "_x")))
-        .groupBy(col("cluster"), col("_p"))
-        .agg(avg(col("_x")).as("_m"))
-        .groupBy(col("cluster"))
-        .agg(transform(array_sort(collect_list(struct(col("_p"), col("_m")))),
-          s => s.getField("_m")).as("_c"))
-        .select(col("cluster").as("_j"), col("_c"))
-      // a cluster that lost every member keeps its previous centroid —
-      // silently returning fewer than k cells would break IVF consumers
-      centroids = materialize(
-        centroids.select(col("_j"), col("_c").as("_prev"))
-          .join(recomputed, Seq("_j"), "left")
-          .select(col("_j"), coalesce(col("_c"), col("_prev")).as("_c")))
-    }
-    (a.select(col(idCol), col("cluster")),
-      centroids.select(col("_j").as("cluster"), col("_c").as("centroid")))
+    val last = Iterator.iterate(init)(step).drop(iterations - 1).next()
+    val centroids = step(last)
+    val assign = udf((v: Seq[Double]) =>
+      if (v == null) 1L else nearest(last, v.toArray) + 1L)
+    (vecs.select(col(idCol), assign(col("_v")).as("cluster")),
+      centroids.toSeq.zipWithIndex.map { case (c, j) => (j + 1L, c.toSeq) }
+        .toDF("cluster", "centroid"))
   }
 
   /** IVF-ish approximate kNN: only candidates in the query's coarse cell. */

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftspec.JobCount
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -94,6 +95,58 @@ class SimilaritySpec extends SparkSpec {
     // a corpus smaller than k must fail loudly, not silently seed < k cells
     intercept[IllegalArgumentException] {
       Similarity.kmeans(pts.limit(2), k = 3, iterations = 1)
+    }
+  }
+
+  /** Plain-Scala Lloyd with kmeans' contract: init = the k smallest ids,
+    * squared distance = the left fold Σ (x−c)² from 0.0, ties to the
+    * smaller cluster, an empty cluster keeps its centroid; assignments
+    * against the centroids at the start of the last iteration. */
+  private def referenceLloyd(pts: Seq[(Long, Array[Double])], k: Int, iterations: Int)
+      : (Map[Long, Long], Seq[Array[Double]]) = {
+    val sorted = pts.sortBy(_._1)
+    def assign(cs: Seq[Array[Double]], v: Array[Double]): Int =
+      cs.indices.minBy(j => (v.indices.foldLeft(0.0) { (acc, i) =>
+        acc + (v(i) - cs(j)(i)) * (v(i) - cs(j)(i)) }, j))
+    var cs: Seq[Array[Double]] = sorted.take(k).map(_._2)
+    var assignment = Map.empty[Long, Long]
+    for (_ <- 0 until iterations) {
+      val byCluster = sorted.groupBy { case (_, v) => assign(cs, v) }
+      assignment = sorted.map { case (id, v) => id -> (assign(cs, v) + 1L) }.toMap
+      cs = cs.indices.map { j =>
+        byCluster.get(j).fold(cs(j)) { m =>
+          m.map(_._2).reduce((a, b) => a.zip(b).map { case (x, y) => x + y }).map(_ / m.size)
+        }
+      }
+    }
+    (assignment, cs)
+  }
+
+  test("kmeans matches a plain-Scala Lloyd reference, one job per iteration") {
+    // 1000 × 16 around 8 seeded centers; ids shuffled so the init rows
+    // come from arbitrary clusters
+    val rng = new scala.util.Random(31)
+    val centers = Array.fill(8)(Array.fill(16)(rng.nextGaussian() * 4))
+    val ids = rng.shuffle((0L until 1000L).toVector)
+    val pts = ids.zipWithIndex.map { case (id, i) =>
+      (id, centers(i % 8).map(_ + rng.nextGaussian()))
+    }
+    val df = pts.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "v")
+    for (n <- 1 to 3) {
+      val ((assign, cents), jobs) = JobCount(spark.sparkContext) {
+        val (a, c) = Similarity.kmeans(df, k = 8, iterations = n)
+        (a.as[(Long, Long)].collect().toMap,
+          c.as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq)
+      }
+      val (expectAssign, expectCents) = referenceLloyd(pts, 8, n)
+      assert(assign == expectAssign, s"assignments differ after $n iterations")
+      assert(cents.map(_._1) == (1L to 8L))
+      cents.zip(expectCents).foreach { case ((j, got), want) =>
+        assert(got.zip(want).forall { case (g, w) => math.abs(g - w) <= 1e-9 },
+          s"centroid $j after $n iterations: $got vs ${want.toSeq}")
+      }
+      // init + one job per iteration + the assignment's collect
+      assert(jobs <= n + 2, s"kmeans(iterations = $n) ran $jobs jobs")
     }
   }
 
